@@ -1,8 +1,9 @@
 package graft.clean
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
+import graft.functions.ExactPercentile
 
 /** Cleaning pipeline — Spark re-expression of `clean_data`
   * (`/root/reference/app.py:104-137`): F1 drop-missing → F3 sentinel
@@ -20,10 +21,11 @@ import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
   *
   * Scale notes: the filters are single conjunctive predicates (Catalyst
   * folds them; they push down to the scan). The report counts are one
-  * aggregate pass of conditional sums — not N sequential jobs. The
-  * quantiles are one exact-`percentile` aggregate over the smoothed
-  * columns; at 100 TB swap `percentile` → `approx_percentile` (flagged
-  * below) since exact percentile materializes per-group value buffers.
+  * aggregate pass of conditional counts — not N sequential jobs. The
+  * quantiles are one exact-percentile aggregate over the smoothed
+  * columns that also counts the replaced spikes; exact percentiles
+  * materialize per-group value buffers, so at 100 TB the bounded-memory
+  * route is `approx_percentile`.
   */
 object Clean {
 
@@ -72,48 +74,51 @@ object Clean {
       val failsHere = outOfRange(c)
       val survivedPrior =
         if (i == 0) lit(true) else cols.take(i).map(p => !outOfRange(p)).reduce(_ && _)
-      sum(when(survivedPrior && failsHere, 1L).otherwise(0L)).as(c)
+      count_if(survivedPrior && failsHere).as(c)
     }
     val row = df.agg(aggs.head, aggs.tail: _*).head()
     cols.zipWithIndex.map { case (c, i) => c -> row.getLong(i) }
   }
 
   /** F4 — quantile spike smoothing (`app.py:122-131`): values outside
-    * (q0.01, q0.99) become the column median. Exact linear-interpolation
-    * percentiles (pandas type-7 ≙ Spark `percentile`); the quantile
-    * aggregate is one pass over all columns, collected as scalars
-    * (3 doubles per column — same driver-side footprint as the
-    * reference's q01/q99/median scalars). */
+    * (q`lo`, q`hi`) become the column median. Exact linear-interpolation
+    * percentiles (pandas type-7 ≙ Spark `percentile`); one aggregate pass
+    * over all columns returns each column's bounds and its replaced
+    * count, collected as scalars (the reference's q01/q99/median plus a
+    * count). Returns (smoothed frame, colName -> replaced values);
+    * all-NULL columns are left alone and unreported. */
   def spikeSmooth(df: DataFrame, cols: Seq[String],
-                  lo: Double = 0.01, hi: Double = 0.99,
-                  approxAtScale: Boolean = false): (DataFrame, Seq[(String, Long)]) = {
+                  lo: Double = 0.01, hi: Double = 0.99): (DataFrame, Seq[(String, Long)]) = {
     val present = cols.filter(df.columns.contains)
     if (present.isEmpty) return (df, Seq.empty)
-    val qAggs = present.flatMap { c =>
-      val base =
-        if (approxAtScale) // 100 TB switch: bounded-memory sketch
-          expr(s"approx_percentile($c, array($lo, 0.5, $hi), 10000)")
-        else graft.functions.ExactPercentile.percentiles(col(c), Seq(lo, 0.5, hi))
-      Seq(base.getItem(0).as(s"${c}_lo"), base.getItem(1).as(s"${c}_med"),
-          base.getItem(2).as(s"${c}_hi"))
-    }
-    val qRow = df.agg(qAggs.head, qAggs.tail: _*).head()
-    val bounds = present.zipWithIndex.map { case (c, i) =>
-      c -> ((qRow.getDouble(3 * i), qRow.getDouble(3 * i + 1), qRow.getDouble(3 * i + 2)))
-    }.toMap
-    // count replaced values per column (for the report) in one agg pass
-    val repAggs = present.map { c =>
-      val (l, _, h) = bounds(c)
-      sum(when(col(c) < l || col(c) > h, 1L).otherwise(0L)).as(c)
-    }
-    val repRow = df.agg(repAggs.head, repAggs.tail: _*).head()
-    val report = present.zipWithIndex.map { case (c, i) => c -> repRow.getLong(i) }
-    val smoothed = present.foldLeft(df) { (d, c) =>
-      val (l, m, h) = bounds(c)
-      d.withColumn(c, when(col(c) < l || col(c) > h, lit(m)).otherwise(col(c)))
-    }
-    (smoothed, report)
+    val aggs = present.map(c => spikeAgg(col(c), lo, hi))
+    val row = df.agg(aggs.head, aggs.tail: _*).head()
+    val found = present.zipWithIndex.flatMap { case (c, i) => spikes(row, i).map(c -> _) }
+    (replaceSpikes(df, found), found.map { case (c, s) => c -> s.replaced })
   }
+
+  /** One column's F4 bounds and the number of its values outside
+    * (`lo`, `hi`), the values `replaceSpikes` rewrites. */
+  private final case class Spikes(lo: Double, median: Double, hi: Double, replaced: Long)
+
+  /** The F4 kernel both smoothing paths share: one aggregate giving the
+    * (q`lo`, median, q`hi`) bounds of `values` AND the count outside
+    * (q`lo`, q`hi`), from the same sorted buffer — no second pass. */
+  private def spikeAgg(values: Column, lo: Double, hi: Double): Column =
+    ExactPercentile.percentilesWithOutside(values, Seq(lo, 0.5, hi))
+
+  /** `spikeAgg`'s result at `row(i)`; None when the column had no values
+    * (a NULL struct), so smoothing is skipped instead of NPE-ing. */
+  private def spikes(row: Row, i: Int): Option[Spikes] =
+    Option(row.getStruct(i)).map { s =>
+      val q = s.getSeq[Double](0)
+      Spikes(q(0), q(1), q(2), s.getLong(1))
+    }
+
+  private def replaceSpikes(df: DataFrame, found: Seq[(String, Spikes)]): DataFrame =
+    found.foldLeft(df) { case (d, (c, s)) =>
+      d.withColumn(c, when(col(c) < s.lo || col(c) > s.hi, lit(s.median)).otherwise(col(c)))
+    }
 
   /** F5 — sort by timestamp (`app.py:133-135`). Range-partitioned sort;
     * no global single partition. */
@@ -126,12 +131,13 @@ object Clean {
     *
     * Job discipline: the reference re-scans its in-memory frame per
     * report line; at 100 TB each scan is a full pass. Here ALL report
-    * numbers (total, missing, sequential range counts) AND the
-    * smoothing quantiles ride ONE combined aggregate — percentiles
-    * take `when(cleanCond, col)` inputs, so "quantiles of the cleaned
-    * data" needs no separate job on the cleaned subset. A second tiny
-    * aggregate counts replaced values (it needs the quantile bounds).
-    * Total: 1 job for camera/log, 2 for motion — vs 5 before. */
+    * numbers (missing, sequential range counts, replaced spikes) AND the
+    * smoothing quantiles ride ONE combined aggregate — percentiles take
+    * `when(cleanCond, col)` inputs, so "quantiles of the cleaned data"
+    * needs no separate job on the cleaned subset, and the spike counts
+    * come from the same sorted buffers. Total: one aggregate (one
+    * collect) for every sensor type, motion included. The output stays
+    * sorted by timestamp (F5). */
   def clean(df: DataFrame, sensorType: String): (DataFrame, Seq[String]) = {
     var report = Vector.empty[String]
     val numeric = numericCols(df)
@@ -144,56 +150,33 @@ object Clean {
       if (numeric.isEmpty) lit(true) else numeric.map(c => !outOfRange(c)).reduce(_ && _)
     val cleanCond = !miss && survivesRange
 
-    // ---- pass 1: every count + the smoothing quantiles ----
-    val baseAggs = Seq(
-      count(lit(1)).as("__n"),
-      sum(when(miss, 1L).otherwise(0L)).as("__miss"))
+    // ---- the one pass: every count + the smoothing bounds ----
+    // count_if, not sum(when(…)): a zero-row frame must count 0, not NULL
     val rangeAggs = numeric.zipWithIndex.map { case (c, i) =>
       val survivedPrior =
         if (i == 0) lit(true) else numeric.take(i).map(p => !outOfRange(p)).reduce(_ && _)
-      sum(when(!miss && survivedPrior && outOfRange(c), 1L).otherwise(0L)).as(s"__r_$c")
+      count_if(!miss && survivedPrior && outOfRange(c)).as(s"__r_$c")
     }
-    val qAggs = smoothCols.map { c =>
-      graft.functions.ExactPercentile.percentiles(
-        when(cleanCond, col(c)), Seq(0.01, 0.5, 0.99)).as(s"__q_$c")
-    }
-    val aggs = baseAggs ++ rangeAggs ++ qAggs
+    val qAggs = smoothCols.map(c => spikeAgg(when(cleanCond, col(c)), 0.01, 0.99).as(s"__q_$c"))
+    val aggs = count_if(miss).as("__miss") +: (rangeAggs ++ qAggs)
     val row = df.agg(aggs.head, aggs.tail: _*).head()
 
-    val before = row.getLong(0)
-    val nMiss = row.getLong(1)
+    val nMiss = row.getLong(0)
     if (nMiss > 0) report :+= s"Removed $nMiss rows with missing values"
     numeric.zipWithIndex.foreach { case (c, i) =>
-      val n = row.getLong(2 + i)
+      val n = row.getLong(1 + i)
       if (n > 0) report :+= s"Removed $n outliers from $c" // app.py:120 wording
     }
-    // a column with ZERO clean rows yields a null quantile array —
-    // skip smoothing/reporting for it instead of NPE-ing on q(0)
-    val bounds = smoothCols.zipWithIndex.flatMap { case (c, i) =>
-      Option(row.getSeq[Double](2 + numeric.size + i))
-        .map(q => c -> ((q(0), q(1), q(2))))
-    }.toMap
-    val smoothable = smoothCols.filter(bounds.contains)
-
-    // ---- pass 2 (motion only): replaced-value counts ----
-    if (smoothable.nonEmpty) {
-      val repAggs = smoothable.map { c =>
-        val (l, _, h) = bounds(c)
-        sum(when(cleanCond && (col(c) < l || col(c) > h), 1L).otherwise(0L)).as(c)
-      }
-      val repRow = df.agg(repAggs.head, repAggs.tail: _*).head()
-      smoothable.zipWithIndex.foreach { case (c, i) =>
-        val n = repRow.getLong(i)
-        if (n > 0) report :+= s"Smoothed $n spikes in $c" // app.py:131 wording
-      }
+    // a column with ZERO clean rows has no bounds: it is not smoothed
+    val found = smoothCols.zipWithIndex.flatMap { case (c, i) =>
+      spikes(row, 1 + numeric.size + i).map(c -> _)
+    }
+    found.foreach { case (c, s) =>
+      if (s.replaced > 0) report :+= s"Smoothed ${s.replaced} spikes in $c" // app.py:131 wording
     }
 
     // ---- the (lazy) transform itself ----
-    val ranged = rangeFilter(dropMissing(df), numeric)
-    val smoothed = smoothable.foldLeft(ranged) { (d, c) =>
-      val (l, m, h) = bounds(c)
-      d.withColumn(c, when(col(c) < l || col(c) > h, lit(m)).otherwise(col(c)))
-    }
+    val smoothed = replaceSpikes(rangeFilter(dropMissing(df), numeric), found)
     val sorted = sortByTimestamp(smoothed)
     if (df.columns.contains("timestamp")) report :+= "Sorted by timestamp"
     (sorted, report)

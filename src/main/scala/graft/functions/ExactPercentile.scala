@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.GraftPlanBridge.{column, expression}
 import org.apache.spark.sql.functions.{array, call_function, lit}
 import org.apache.spark.sql.types._
 
@@ -32,20 +33,30 @@ final class DoubleBuf(var arr: Array[Double], var n: Int) {
   * appends primitive doubles and sorts once at eval: identical
   * results, ~5× faster at bench scale.
   *
+  * `countOutside` also returns, from the same sorted buffer, how many
+  * values lie strictly outside (first, last percentile) — the count a
+  * second `v < lo OR v > hi` pass over the input would give.
+  *
   * Scale note: like the built-in exact percentile, state is O(rows)
   * per group — that is inherent to EXACT quantiles. At 100 TB use
-  * `approx_percentile` (see Clean.spikeSmooth's approxAtScale flag);
-  * this aggregate exists because the oracle contract demands exact. */
+  * Spark's bounded-memory `approx_percentile` sketch; this aggregate
+  * exists because the oracle contract demands exact. */
 case class ExactPercentile(
     child: Expression,
     percentages: Seq[Double],
     mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
+    inputAggBufferOffset: Int = 0,
+    countOutside: Boolean = false)
   extends TypedImperativeAggregate[DoubleBuf] {
+
+  private def qType = ArrayType(DoubleType, containsNull = false)
 
   override def children: Seq[Expression] = Seq(child)
   override def nullable: Boolean = true
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  override def dataType: DataType =
+    if (countOutside) StructType(Seq(StructField("q", qType, nullable = false),
+      StructField("outside", LongType, nullable = false)))
+    else qType
 
   override def createAggregationBuffer(): DoubleBuf = new DoubleBuf()
 
@@ -70,12 +81,27 @@ case class ExactPercentile(
     if (buf.n == 0) return null
     val a = java.util.Arrays.copyOf(buf.arr, buf.n)
     java.util.Arrays.sort(a)
-    new GenericArrayData(percentages.map { p =>
+    val qs = percentages.map { p =>
       val pos = p * (a.length - 1)
       val lo = pos.toInt
       val frac = pos - lo
       if (lo + 1 < a.length) a(lo) * (1 - frac) + a(lo + 1) * frac else a(lo)
-    }.toArray)
+    }.toArray
+    if (countOutside) InternalRow(new GenericArrayData(qs), outside(a, qs.head, qs.last))
+    else new GenericArrayData(qs)
+  }
+
+  /** Values strictly below `lo` or above `hi` under SQL double ordering
+    * (NaN above every number, -0.0 equal to 0.0). */
+  private def outside(a: Array[Double], lo: Double, hi: Double): Long = {
+    var n = 0L
+    var i = 0
+    while (i < a.length) {
+      if (SQLOrderingUtil.compareDoubles(a(i), lo) < 0 ||
+          SQLOrderingUtil.compareDoubles(a(i), hi) > 0) n += 1
+      i += 1
+    }
+    n
   }
 
   override def serialize(buf: DoubleBuf): Array[Byte] = {
@@ -127,4 +153,11 @@ object ExactPercentile {
     register(SparkSession.active)
     call_function("graft_percentile", e, array(ps.map(lit): _*))
   }
+
+  /** Column API: exact percentiles of `e` at `ps` plus the number of
+    * values strictly outside (`ps.head`, `ps.last`) percentiles, in one
+    * aggregate, as struct<q: array<double>, outside: bigint>; NULL when
+    * `e` has no non-NULL value. */
+  def percentilesWithOutside(e: Column, ps: Seq[Double]): Column =
+    column(ExactPercentile(expression(e), ps, countOutside = true).toAggregateExpression())
 }

@@ -1,6 +1,7 @@
 package graft.sync
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftPlanBridge.unordered
 import org.apache.spark.sql.functions._
 import graft.clean.Clean
 
@@ -32,8 +33,6 @@ object Synchronize {
     r.select(col("timestamp") +: valueCols.map(c => col(c).as(s"${prefix}_$c")): _*)
   }
 
-  /** Full synchronization. `log=None` skips Y7 like the reference's
-    * optional log (`app.py:178`). Returns (wide table, report). */
   /** Render an epoch-us instant the way the reference's report does
     * (pandas Timestamp str: micros shown only when non-zero). */
   private def fmtUs(us: Long): String = {
@@ -46,15 +45,22 @@ object Synchronize {
     if (micros == 0) head else f"$head.$micros%06d"
   }
 
-  /** Full synchronization. `log=None` skips Y7 like the reference's
-    * optional log (`app.py:178`). `withCounts=true` adds the two
-    * report lines that need extra counting jobs (`app.py:191,194`
-    * wording parity); off by default so the report never forces an
-    * eager recompute of the result. */
-  /** `tieCol`: when the sensors may carry duplicate timestamps, names
-    * the column whose MAX breaks the tie — fused into the resample
-    * aggregate instead of a separate dedupe shuffle (see
-    * AsofJoin.uniformGrid). */
+  /** Full synchronization. Returns (wide table, report).
+    *  - `log=None` skips Y7 like the reference's optional log
+    *    (`app.py:178`).
+    *  - `withCounts=true` adds the two report lines that need extra
+    *    counting jobs (`app.py:191,194` wording parity); off by default
+    *    so the report never forces an eager recompute of the result.
+    *  - `tieCol`: when the sensors may carry duplicate timestamps, names
+    *    the column whose MAX breaks the tie — fused into the resample
+    *    aggregate instead of a separate dedupe shuffle (see
+    *    AsofJoin.uniformGrid).
+    *
+    * Row order of the inputs is irrelevant: every consumer below (the
+    * overlap min/max, the as-of `groupBy(tick)`, the event pivot) is an
+    * aggregate. So a top-level sort on an input — `Clean.clean`'s F5 —
+    * is stripped on entry; kept, it would plan a range exchange, with
+    * its own sampling job over the source, in every plan built here. */
   def synchronize(spark: SparkSession, camera: DataFrame, motion: DataFrame,
                   log: Option[DataFrame], method: String = "nearest",
                   stepUs: Long = DefaultStepUs, tolUs: Long = DefaultTolUs,
@@ -65,7 +71,7 @@ object Synchronize {
     var report = Vector.empty[String]
 
     // Y2 — coerce (no-op when already TimestampType)
-    val cam = coerce(camera); val mot = coerce(motion)
+    val cam = coerce(unordered(camera)); val mot = coerce(unordered(motion))
 
     // Y3 — overlap window (log excluded, app.py:155-156)
     val (startUs, endUs) = TimeGrid.overlapWindowUs(cam, "timestamp", mot, "timestamp")
@@ -92,7 +98,7 @@ object Synchronize {
     val motCols = mot.columns.filterNot(_ == "timestamp").toSeq
     val fusable = tieCol.forall(tc =>
       cam.schema(tc).dataType == mot.schema(tc).dataType)
-    val lgOpt = log.map(coerce)
+    val lgOpt = log.map(l => coerce(unordered(l)))
     lgOpt.foreach { lg =>
       report :+= (if (withCounts)
         s"Mapped ${lg.count()} log events to synchronized timeline" // app.py:191

@@ -85,4 +85,51 @@ class CleanSpec extends GraftSpec {
     assert(cleaned.count() === 0)
     assert(!report.exists(_.startsWith("Smoothed")))
   }
+
+  test("a zero-row frame cleans to zero rows with zero counts (header-only CSV)") {
+    for ((empty, kind) <- Seq(SampleData.camera(spark, n = 500).limit(0) -> "camera",
+                              SampleData.motion(spark, n = 600).limit(0) -> "motion")) {
+      val (cleaned, report) = Clean.clean(empty, kind)
+      assert(cleaned.count() === 0, kind)
+      assert(report === Seq("Sorted by timestamp"), kind)
+    }
+    val empty = SampleData.motion(spark, n = 600).limit(0)
+    assert(Clean.rangeFilterReport(empty, Seq("accel_x", "gyro_z")) ===
+      Seq("accel_x" -> 0L, "gyro_z" -> 0L))
+    assert(Clean.spikeSmooth(empty, Clean.motionSmoothCols)._2.isEmpty)
+  }
+
+  test("the folded spike counts equal an explicit two-pass count") {
+    val mot = SampleData.motion(spark, n = 5000)
+    val cols = Clean.motionSmoothCols
+    // the two passes the fold replaces: bounds first, then a count
+    // against those bounds
+    def twoPass(df: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+      val bounds = cols.map(c => graft.functions.ExactPercentile.percentiles(col(c), Seq(0.01, 0.99)))
+      val q = df.agg(bounds.head, bounds.tail: _*).head()
+      val counts = cols.zipWithIndex.map { case (c, i) =>
+        val Seq(lo, hi) = q.getSeq[Double](i)
+        count_if(col(c) < lo || col(c) > hi)
+      }
+      val n = df.agg(counts.head, counts.tail: _*).head()
+      cols.indices.map(i => cols(i) -> n.getLong(i)).toMap
+    }
+    val Smoothed = "Smoothed (\\d+) spikes in (\\w+)".r
+    val folded = Clean.clean(mot, "motion")._2.collect { case Smoothed(n, c) => c -> n.toLong }
+    val kept = Clean.rangeFilter(Clean.dropMissing(mot), Clean.numericCols(mot))
+    assert(folded.size === cols.size)
+    assert(folded.toMap === twoPass(kept))
+    // the standalone F4 step rides the same kernel
+    assert(Clean.spikeSmooth(mot, cols)._2.toMap === twoPass(mot))
+  }
+
+  test("clean output collects in timestamp order (F5)") {
+    for ((raw, kind) <- Seq(SampleData.camera(spark, n = 500) -> "camera",
+                            SampleData.motion(spark, n = 600) -> "motion")) {
+      val scrambled = raw.orderBy(col(raw.columns.last).desc)
+      val ts = Clean.clean(scrambled, kind)._1.collect()
+        .map(_.getAs[java.sql.Timestamp]("timestamp").getTime).toSeq
+      assert(ts.nonEmpty && ts === ts.sorted, kind)
+    }
+  }
 }

@@ -121,6 +121,20 @@ object PercentileProps extends Properties("ExactPercentile") {
       math.abs(out - model(xs, p)) < 1e-6 * math.max(1.0, math.abs(model(xs, p)))
     }
 
+  property("countOutside equals a SQL `v < lo OR v > hi` filter over the input") =
+    forAll(Gen.nonEmptyListOf(Gen.frequency(
+        8 -> Gen.chooseNum(-1e3, 1e3), 1 -> Gen.oneOf(Double.NaN, 0.0, -0.0))),
+      pct, pct) { (xs, p1, p2) =>
+      val (lo, hi) = (math.min(p1, p2), math.max(p1, p2))
+      val agg = ExactPercentile(null, Seq(lo, hi), countOutside = true)
+      val b = new DoubleBuf(); xs.foreach(b.add)
+      val out = agg.eval(b).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]
+      val Array(qLo, qHi) = out.getArray(0).toDoubleArray()
+      // SQL `<` on doubles: NaN is above every number, -0.0 == 0.0
+      def lt(a: Double, b: Double) = !a.isNaN && (b.isNaN || a < b)
+      out.getLong(1) == xs.count(v => lt(v, qLo) || lt(qHi, v))
+    }
+
   property("serialize/deserialize round-trips the buffer") =
     forAll(data) { xs =>
       val agg = ExactPercentile(null, Seq(0.5))

@@ -76,4 +76,92 @@ class SynchronizeSpec extends GraftSpec {
     }
     assert(e.getMessage.contains("overlap"))
   }
+
+  /** Jobs started by `body`, counted on the listener bus. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerDrain.drain(sc)
+    sc.addSparkListener(l)
+    try { body; org.apache.spark.GraftListenerDrain.drain(sc) }
+    finally sc.removeSparkListener(l)
+    jobs.get()
+  }
+
+  private def withAqe[T](on: Boolean)(body: => T): T = {
+    val was = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", on.toString)
+    try body finally spark.conf.set("spark.sql.adaptive.enabled", was)
+  }
+
+  /** A small recording staged as header CSV and read back through
+    * `CsvIngest`, like the reference's uploads: unlike the generators'
+    * frames, its plans carry no sort of their own. */
+  private lazy val recordingDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sync-rec").toFile.getAbsolutePath
+    def write(df: org.apache.spark.sql.DataFrame, name: String): Unit =
+      df.write.option("header", "true")
+        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS").csv(s"$dir/$name")
+    write(SampleData.camera(spark, n = 500, startUs = T0, partitions = 2), "camera")
+    write(SampleData.motion(spark, n = 600, startUs = T0 + 50000L, partitions = 2), "motion")
+    write(SampleData.log(spark, n = 100, startUs = T0, partitions = 2), "log")
+    dir
+  }
+
+  /** The reference job over the staged recording: read, clean ×3, sync. */
+  private def cleanedRecording = {
+    import graft.model.Schemas
+    import graft.sources.CsvIngest
+    def cleaned(kind: String, schema: org.apache.spark.sql.types.StructType) =
+      Clean.clean(CsvIngest.read(spark, s"$recordingDir/$kind", schema), kind)._1
+    (cleaned("camera", Schemas.camera), cleaned("motion", Schemas.motion),
+      cleaned("log", Schemas.log))
+  }
+
+  test("synchronize strips Clean's sorts: no range exchange in the synchronized plan") {
+    val (cam, mot, log) = cleanedRecording
+    withAqe(on = false) {
+      // F5 itself is intact: the cleaned frame alone still range-sorts
+      assert(cam.queryExecution.executedPlan.toString.contains("rangepartitioning"))
+      val plan = Synchronize.synchronize(spark, cam, mot, Some(log))._1
+        .queryExecution.executedPlan.toString
+      assert(!plan.contains("rangepartitioning"),
+        s"a cleaned input's sort survived into the synchronized plan:\n$plan")
+    }
+  }
+
+  test("under AQE the sensor alignment runs once: the carry side reuses its exchange") {
+    import org.apache.spark.sql.execution.UnionExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val (cam, mot, log) = cleanedRecording
+    withAqe(on = true) {
+      val (out, _) = Synchronize.synchronize(spark, cam, mot, Some(log))
+      out.collect()
+      // the final adaptive plan: query stages are walked, a reused
+      // exchange is a leaf — so a second alignment is a second Union
+      val plan = out.queryExecution.executedPlan
+      val walk = new AdaptiveSparkPlanHelper {}
+      val unions = walk.collect(plan) { case u: UnionExec => u }
+      assert(unions.size === 1,
+        s"the camera ∪ motion alignment aggregate ran ${unions.size} times:\n$plan")
+      assert(walk.collect(plan) {
+        case r: ReusedExchangeExec if walk.find(r.child)(_.isInstanceOf[UnionExec]).nonEmpty => r
+      }.nonEmpty, s"the carry digest must reuse the alignment's exchange:\n$plan")
+    }
+  }
+
+  test("job ceiling: clean x3 + synchronize + write of a small recording") {
+    val jobs = withAqe(on = true)(jobsIn {
+      val (cam, mot, log) = cleanedRecording
+      Synchronize.synchronize(spark, cam, mot, Some(log))._1
+        .write.mode("overwrite").format("noop").save()
+    })
+    // measured 22: clean 6 (one aggregate each), sync and the write 16
+    assert(jobs <= 22, s"the sensor pipeline ran $jobs Spark jobs")
+  }
 }
